@@ -112,7 +112,7 @@ class ArtifactStore:
         # task.description/fileGroup.name/, VersionControl.scala:85-129).
         run_dir = os.path.join(self.root, "runs", run_id, pdf.task_id)
         manifest.write.mode("append").parquet(run_dir)
-        written = session.spark.read.parquet(run_dir)
+        written = session.spark.read.schema(MANIFEST_SCHEMA).parquet(run_dir)
         # provenance link: element → artifact folder (fileGroupReference).
         # Distributed append straight from the manifest — no driver collect
         # loop; at millions of groups this is one small shuffle + write.

@@ -14,6 +14,8 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from samba_spark.sources.tables import read_parquet
+
 
 def write_bucketed(
     df: DataFrame,
@@ -129,7 +131,7 @@ def compact_dataset(
         if not f.startswith(("_", "."))
     )
     n_files = max(1, math.ceil(size / (target_mb * 1024 * 1024)))
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     tmp = path.rstrip("/") + ".compact.tmp"
     writer = df.repartition(n_files).write.mode("overwrite")
     if partition_by:

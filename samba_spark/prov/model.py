@@ -62,6 +62,12 @@ ELEMENTS = T.StructType(
     ]
 )
 
+# Element mutations (update/delete) as append-only rows; the latest ``seq``
+# per element wins (ProvStore.read_elements_current).
+ELEMENT_OVERRIDES = T.StructType(
+    list(ELEMENTS.fields) + [T.StructField("seq", T.LongType(), False)]
+)
+
 ELEMENT_DEPS = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),

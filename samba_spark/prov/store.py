@@ -347,13 +347,10 @@ class ProvStore:
     # are appended as versioned tombstone/override rows; readers resolve
     # latest-wins via read_elements_current().
     def _write_override(self, run_id, task_id, element_id, values, value_json):
-        schema = T.StructType(
-            list(model.ELEMENTS.fields) + [T.StructField("seq", T.LongType(), False)]
-        )
         _write_rows_parquet(
             os.path.join(self.prov_dir, "element_overrides"),
             [(run_id, task_id, element_id, values, value_json, time.time_ns())],
-            schema,
+            model.ELEMENT_OVERRIDES,
         )
 
     def update_element_value(
@@ -380,7 +377,8 @@ class ProvStore:
             return base
         w = Window.partitionBy("element_id").orderBy(F.desc("seq"))
         overrides = (
-            self.spark.read.parquet(path)
+            self.spark.read.schema(model.ELEMENT_OVERRIDES)
+            .parquet(path)
             .where(F.col("run_id") == run_id)
             .withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)  # latest override wins
@@ -474,15 +472,15 @@ class ProvStore:
         if not dropped:
             return {"kept_runs": keep, "dropped_runs": []}
 
-        table_names = list(model.TABLES) + ["element_overrides"]
-        for name in table_names:
+        schemas = {**model.TABLES, "element_overrides": model.ELEMENT_OVERRIDES}
+        for name, schema in schemas.items():
             path = os.path.join(self.prov_dir, name)
             if not os.path.isdir(path):
                 continue
             for stale in (path + ".vacuum.tmp", path + ".vacuum.old"):
                 if os.path.isdir(stale):
                     shutil.rmtree(stale)
-            df = self.spark.read.parquet(path)
+            df = self.spark.read.schema(schema).parquet(path)
             kept_df = df.where(F.col("run_id").isin(keep))
             kept_df.write.mode("overwrite").parquet(path + ".vacuum.tmp")
             os.rename(path, path + ".vacuum.old")

@@ -18,7 +18,7 @@ from samba_spark.operators import simsearch as S
 from samba_spark.operators import textual as X
 from samba_spark.operators import multimodal as M
 from samba_spark.queries.declared import QuerySpec, scratch_dir
-from samba_spark.sources.tables import load_tables
+from samba_spark.sources.tables import load_tables, read_parquet
 
 
 def _pid_scratch(name: str) -> str:
@@ -1760,11 +1760,11 @@ def q53_provenance_counts(spark, sf_dir):
     agged.collect()
     ps.stop()
 
-    tasks = spark.read.parquet(f"{Q53_PROV_DIR}/tasks").select(
+    tasks = read_parquet(spark, f"{Q53_PROV_DIR}/tasks").select(
         "task_id", "transformation_type"
     )
-    els = spark.read.parquet(f"{Q53_PROV_DIR}/elements")
-    deps = spark.read.parquet(f"{Q53_PROV_DIR}/element_deps")
+    els = read_parquet(spark, f"{Q53_PROV_DIR}/elements")
+    deps = read_parquet(spark, f"{Q53_PROV_DIR}/element_deps")
     e_per = (
         els.join(tasks, "task_id")
         .groupBy("transformation_type")
@@ -2559,8 +2559,8 @@ def q62_column_lineage(spark, sf_dir):
     the literal expected edge set."""
     from samba_spark.prov.column_lineage import column_lineage
 
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    r = spark.read.parquet(f"{sf_dir}/region.parquet")
+    n = read_parquet(spark, f"{sf_dir}/nation.parquet")
+    r = read_parquet(spark, f"{sf_dir}/region.parquet")
     df = (
         n.join(r, n.n_regionkey == r.r_regionkey)
         .withColumn("key2", F.col("n_nationkey") * 2)
@@ -5564,7 +5564,7 @@ def x_sessionize_stream(spark, sf_dir):
         spark, batches_dir, store, gap_seconds=1800, user_buckets=8
     )
     return (
-        spark.read.parquet(store)
+        read_parquet(spark, store)
         .groupBy("user_id", "session_id")
         .agg(
             F.min("ts").alias("s_start"),
@@ -7042,7 +7042,7 @@ def x_incremental_sessionize(spark, sf_dir):
         gap_seconds=1800,
     )
     return (
-        spark.read.parquet(store)
+        read_parquet(spark, store)
         .groupBy("user_id", "session_id")
         .agg(
             F.min("ts").alias("s_start"),
@@ -7122,7 +7122,7 @@ def x_session_store_delete(spark, sf_dir):
     )
     delete_from_session_store(spark, store, doomed)
     return (
-        spark.read.parquet(store)
+        read_parquet(spark, store)
         .groupBy("user_id", "session_id")
         .agg(
             F.min("ts").alias("s_start"),
@@ -7172,7 +7172,7 @@ def x_session_store_compact(spark, sf_dir):
         spark, store, events.where(F.col("ts") >= F.lit(t2)), **kw
     )
     return (
-        spark.read.parquet(store)
+        read_parquet(spark, store)
         .groupBy("user_id", "session_id")
         .agg(
             F.min("ts").alias("s_start"),

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from samba_spark.queries.declared import QuerySpec
-from samba_spark.sources.tables import load_tables
+from samba_spark.sources.tables import load_tables, read_parquet
 
 
 def x70_variant_extract(spark, sf_dir):
@@ -400,7 +400,7 @@ def q75_run_diff(spark, sf_dir):
     a2.collect()
     v2.stop()
 
-    tasks = spark.read.parquet(f"{Q75_PROV_DIR}/tasks")
+    tasks = read_parquet(spark, f"{Q75_PROV_DIR}/tasks")
     # one row per run, preferring the completed (non-null end_time) row:
     # this query reads the parquet store raw (the oracle must see the
     # same bytes), which bypasses ProvStore.table()'s per-run dedup — a
@@ -412,7 +412,7 @@ def q75_run_diff(spark, sf_dir):
 
     _w75 = _W.partitionBy("run_id").orderBy(F.col("end_time").desc_nulls_last())
     execs = (
-        spark.read.parquet(f"{Q75_PROV_DIR}/executions")
+        read_parquet(spark, f"{Q75_PROV_DIR}/executions")
         .withColumn("_rn", F.row_number().over(_w75))
         .where(F.col("_rn") == 1)
         .select("run_id", F.col("name").alias("run_name"))

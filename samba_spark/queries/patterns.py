@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from samba_spark.queries.declared import QuerySpec, scratch_dir
-from samba_spark.sources.tables import load_tables
+from samba_spark.sources.tables import load_tables, read_parquet
 
 
 def q77_recursive_cte(spark, sf_dir):
@@ -697,7 +697,7 @@ def x87_sketch_persistence(spark, sf_dir):
     shutil.rmtree(X87_ROOT, ignore_errors=True)
     daily.write.parquet(X87_ROOT)
 
-    stored = spark.read.parquet(X87_ROOT)
+    stored = read_parquet(spark, X87_ROOT)
     est = stored.groupBy("event_type").agg(
         F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias("estimate")
     )

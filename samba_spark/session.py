@@ -159,8 +159,9 @@ class ProvSession:
     # -- data ingress ------------------------------------------------------
     def read_parquet(self, path: str, name: Optional[str] = None):
         from samba_spark.operators.wrapper import ProvDataFrame
+        from samba_spark.sources.tables import read_parquet
 
-        df = self.spark.read.parquet(path)
+        df = read_parquet(self.spark, path)
         return ProvDataFrame._source(self, df, op="read_parquet", desc=name or path)
 
     def sql(self, query: str, name: Optional[str] = None):

@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from samba_spark.sources.tables import read_parquet
+
 EVENTS_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -510,7 +512,7 @@ def run_cdc_snapshot(
 
     from pyspark.sql import functions as F
 
-    sample = spark.read.parquet(events_dir)
+    sample = read_parquet(spark, events_dir)
     schema = sample.schema
     state = {"path": None}
 
@@ -521,7 +523,7 @@ def run_cdc_snapshot(
         if state["path"] is None:
             merged = reduced
         else:
-            prev = batch_df.sparkSession.read.parquet(state["path"])
+            prev = read_parquet(batch_df.sparkSession, state["path"])
             merged = merge_latest(prev, reduced, list(keys), list(order_cols))
         out = os.path.join(work_dir, f"snapshot_{batch_id}")
         merged.write.mode("overwrite").parquet(out)
@@ -536,7 +538,7 @@ def run_cdc_snapshot(
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(state["path"])
+    return read_parquet(spark, state["path"])
 
 
 def read_cdc_snapshot(spark, work_dir: str, version: int | None = None):
@@ -562,7 +564,7 @@ def read_cdc_snapshot(spark, work_dir: str, version: int | None = None):
         raise FileNotFoundError(
             f"snapshot_{v} not present (have {versions})"
         )
-    return spark.read.parquet(os.path.join(work_dir, f"snapshot_{v}"))
+    return read_parquet(spark, os.path.join(work_dir, f"snapshot_{v}"))
 
 
 _TOTALS_CENTS_SCHEMA = (
@@ -811,7 +813,7 @@ def run_admission_stream(
     from pyspark.errors import AnalysisException
 
     try:
-        schema = spark.read.parquet(batches_dir).schema
+        schema = read_parquet(spark, batches_dir).schema
     except AnalysisException:
         # an empty/absent batches_dir cannot be schema-inferred (UNABLE_
         # TO_INFER_SCHEMA / PATH_NOT_FOUND); an empty stream is an empty
@@ -931,7 +933,7 @@ def run_admission_stream(
         log = log.unionByName(piece)
     out = os.path.join(work_dir, "log")
     log.write.mode("overwrite").parquet(out)
-    return spark.read.parquet(out)
+    return read_parquet(spark, out)
 
 
 def run_sessionize_stream(
@@ -984,7 +986,7 @@ def run_sessionize_stream(
     out_cols = [user_col, id_col, ts_col, type_col]
 
     def _store_rows():
-        return spark.read.parquet(store_path).select(
+        return read_parquet(spark, store_path).select(
             *out_cols, "session_id"
         )
 
@@ -994,7 +996,7 @@ def run_sessionize_stream(
         )
 
     try:
-        schema = spark.read.parquet(batches_dir).schema
+        schema = read_parquet(spark, batches_dir).schema
     except AnalysisException:
         # empty/absent batches dir: zero new events. If the store
         # already exists its accumulated rows ARE the answer (with

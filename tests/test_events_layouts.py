@@ -53,6 +53,23 @@ def test_load_tables_normalizes_both_layouts(spark, tmp_path, unit):
     assert got == INSTANTS
 
 
+def test_rewritten_layout_is_sniffed_again(spark, tmp_path):
+    """A file rewritten at the same path from NANOS to MICROS must not keep
+    the cached NANOS verdict: that would send MICROS values through the
+    LongType + div-1000 read, 1000x off with no error."""
+    d = tmp_path / "sf"
+    d.mkdir()
+    path = str(d / "events.parquet")
+    _write_events(path, "ns")
+    assert events_ts_is_nanos(path)
+    load_tables(spark, str(d), ["events"])["events"].collect()
+    _write_events(path, "us")
+    assert not events_ts_is_nanos(path)
+    df = load_tables(spark, str(d), ["events"])["events"]
+    got = [r.ts.replace(tzinfo=None) for r in df.orderBy("event_id").collect()]
+    assert got == INSTANTS
+
+
 def test_streaming_read_normalizes_both_layouts(spark, tmp_path):
     from samba_spark.streaming.ops import read_events_stream
 
