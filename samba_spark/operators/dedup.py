@@ -24,13 +24,21 @@ from __future__ import annotations
 
 import os
 import random
-import shutil
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from samba_spark.operators.guards import plan_assert
-from samba_spark.operators.leases import _URI_SCHEME, single_writer
+from samba_spark.operators.store import (
+    Store,
+    append_pending,
+    count_data_files,
+    counting,
+    pending_marker,
+    replace_dirs,
+    single_writer,
+    staging_dir,
+)
 
 _NORM = r"\s+"
 
@@ -43,8 +51,6 @@ _NORM = r"\s+"
 # cross-engine reproducibility is not needed (throughput path at scale).
 MINHASH_P = (1 << 61) - 1
 
-# URI-scheme sniff shared by the index maintenance verbs: a non-file
-# scheme means the driver-side os/shutil machinery cannot reach the path
 _rng = random.Random(20260813)
 MINHASH_A = [_rng.randrange(1, 1 << 30) for _ in range(64)]
 MINHASH_B = [_rng.randrange(0, 1 << 30) for _ in range(64)]
@@ -1324,6 +1330,12 @@ def minhash_probe_frozen(
     )
 
 
+# The persisted index's declaration to the store protocol (store.py):
+# compaction stages whole ``sigs``/``bands`` datasets, and tombstones are
+# keyed on doc_id.
+MINHASH_STORE = Store(replace_dirs("sigs", "bands"), key="doc_id")
+
+
 def _band_bucket(band_buckets: int) -> Column:
     """Stable bucket id for a band key — the bucketed bands layout's
     partition column (pmod(xxhash64(band_hash), N), deterministic, so
@@ -1379,22 +1391,9 @@ def save_minhash_index(
             f"save_minhash_index: band_buckets={band_buckets} must be "
             ">= 0 (0 = flat layout)"
         )
-    # Rebuild-in-place hygiene (review finding): a stale tombstone set
-    # or compaction staging left under ``path`` would corrupt the fresh
-    # index — stale ``deletes`` silently hide freshly-saved docs from
-    # every probe, and a stale COMMITTED ``_compact`` would roll forward
-    # over the new datasets at the next load. Clear both first. Only a
-    # local path can hold them (delete/compact refuse remote paths), so
-    # the os-level cleanup is correctly skipped for URI schemes.
-    if not _URI_SCHEME.match(path):
-        shutil.rmtree(f"{path}/_compact", ignore_errors=True)
-        shutil.rmtree(f"{path}/deletes", ignore_errors=True)
-        # a stale in-flight-append marker from a previous index at this
-        # path must not force the fresh index onto the repair path
-        try:
-            os.remove(f"{path}/_APPEND_PENDING")
-        except FileNotFoundError:
-            pass
+    # rebuild in place: a previous index's tombstones, staging and
+    # append-pending marker must not apply to the fresh one
+    MINHASH_STORE.reset(path)
     spark = documents.sparkSession
     from concurrent.futures import ThreadPoolExecutor, wait
 
@@ -1488,8 +1487,11 @@ def load_minhash_index(
     anti-joined out of BOTH returned DataFrames — bands BEFORE any
     downstream bucket cap (so ``_cap_buckets`` counts live rows only,
     exactly as if the deleted docs had never been indexed) and sigs so
-    a deleted doc can never verify as a match. An interrupted
-    compaction is repaired first (:func:`_recover_compaction`).
+    a deleted doc can never verify as a match. A committed but
+    unfinished compaction is finished first, under the writer lease
+    (``LeaseHeldError`` while a writer holds it); uncommitted staging is
+    left to its writer — the live datasets are authoritative until the
+    commit point.
 
     ``band_bucket_filter``: on a bucketed-layout index
     (``save_minhash_index(band_buckets=N)``) restrict the bands scan to
@@ -1498,10 +1500,7 @@ def load_minhash_index(
     100 TB). Ignored (with the same results) on a flat index. The
     returned bands frame always carries exactly
     (doc_id, band, band_hash) whatever the layout."""
-    from samba_spark.operators.leases import reject_file_scheme
-
-    reject_file_scheme(path, "load_minhash_index")
-    _recover_compaction(path)
+    MINHASH_STORE.recover_for_read(path, "load_minhash_index")
     if meta is None:
         meta = _load_index_meta(spark, path)
     # pre-bucketing (4-column) metas read as the flat layout
@@ -1530,10 +1529,8 @@ def load_minhash_index(
         spark.read.schema(s_schema) if s_schema is not None else spark.read
     ).parquet(f"{path}/sigs")
     meta.setdefault("_sigs_schema", sigs.schema)
-    deletes = _read_deletes(spark, path)
-    if deletes is not None:
-        bands = bands.join(deletes, "doc_id", "left_anti")
-        sigs = sigs.join(deletes, "doc_id", "left_anti")
+    bands = MINHASH_STORE.live(spark, path, bands)
+    sigs = MINHASH_STORE.live(spark, path, sigs)
     return bands, sigs, meta
 
 
@@ -1561,12 +1558,9 @@ def probe_minhash_index(
     placement hash is the same deterministic function on both sides),
     and bucket-cap counts are bucket-local so capping the probed subset
     equals capping the whole table (the probe's standing argument)."""
-    # meta first (1-row collect, no reader construction) to learn the
-    # layout; _recover_compaction runs inside the real load below
-    from samba_spark.operators.leases import reject_file_scheme
-
-    reject_file_scheme(path, "probe_minhash_index")
-    _recover_compaction(path)
+    # finish a committed swap before the meta read (1-row collect, no
+    # reader construction) that learns the layout
+    MINHASH_STORE.recover_for_read(path, "probe_minhash_index")
     meta = _load_index_meta(spark, path)
     band_buckets = int(meta.get("band_buckets", 0) or 0)
     delta_sigs = None
@@ -2011,7 +2005,7 @@ def exact_substring_keep_one(
     return _coverage_reassemble(tokens, n_tok, covered)
 
 
-@single_writer("append_minhash_index", "path")
+@single_writer(MINHASH_STORE, "append_minhash_index", "path", remote_ok=True)
 def append_minhash_index(
     documents: DataFrame,
     path: str,
@@ -2046,7 +2040,7 @@ def append_minhash_index(
     double-append sigs/bands, and duplicate band rows inflate
     ``_cap_buckets`` counts, silently dropping legitimate buckets near
     ``max_bucket``. ENFORCED since round 11 (VERDICT r10 item 3) for
-    local paths via the ``_LEASE`` marker (leases.single_writer — a
+    local paths via the store lease (store.single_writer — a
     second concurrent verb fails loudly with LeaseHeldError at entry);
     a REMOTE index path cannot hold a posix lease, so remote appends
     keep the documented serialize-externally contract
@@ -2062,17 +2056,12 @@ def append_minhash_index(
     correct: probes cap (band, band_hash) buckets over the LOADED union
     table, so accumulation across appends behaves exactly like a
     one-shot build (asserted by the x158 oracle, which replays the
-    union corpus in one pass)."""
-    from samba_spark.operators.leases import reject_file_scheme
+    union corpus in one pass).
 
-    reject_file_scheme(path, "append_minhash_index")
+    An interrupted compaction is repaired at entry (single_writer), so
+    the anti-joins below never run against stale live datasets that a
+    later roll-forward would replace, erasing the acknowledged batch."""
     spark = documents.sparkSession
-    # Repair an interrupted compaction FIRST (review finding): without
-    # this, an append after a committed-but-unswapped compact anti-joins
-    # against the STALE live datasets and appends there — and the next
-    # verb's roll-forward then erases the acknowledged batch forever.
-    # With it, the roll-forward happens here, before the anti-joins.
-    _recover_compaction(path)
     # meta + the two ID columns only — loading the full bands DataFrame
     # here (review finding) paid a corpus-scale dataset listing per
     # append just to discard it; both scans below are column-pruned to
@@ -2171,131 +2160,39 @@ def append_minhash_index(
     # r12: the band anti-join is a CORPUS-SCALE distinct (16 band rows
     # per indexed doc shuffled down to doc_ids) paid on EVERY append,
     # yet it filters rows only on the retry AFTER a crash between the
-    # two writes. The ``_APPEND_PENDING`` marker (created before the
-    # bands write, removed after sigs lands) witnesses exactly that
-    # crash window: no marker ⇒ every doc with band rows also has sig
-    # rows ⇒ the sig anti-join above already excluded them ⇒ the band
-    # anti-join is provably vacuous and is SKIPPED. A marker found at
-    # entry means SOME append once died between its writes — possibly
-    # for docs never re-offered — so the marker is STICKY: every later
-    # append keeps the repair anti-join until a compact reconciles
-    # bands against sigs (compact_minhash_index clears it). Remote
-    # paths cannot hold a driver-side marker and keep the
-    # unconditional anti-join; merge_minhash_indexes (the other
-    # bands-first writer) maintains the same marker. Same
-    # single-writer lease as the writes, so no marker races.
+    # two writes. The append-pending marker (store.append_pending: set
+    # before the bands write, removed after sigs lands) witnesses
+    # exactly that crash window: no marker ⇒ every doc with band rows
+    # also has sig rows ⇒ the sig anti-join above already excluded them
+    # ⇒ the band anti-join is provably vacuous and is SKIPPED. A marker
+    # found at entry is sticky until a compact reconciles bands against
+    # sigs; remote paths cannot hold it and keep the unconditional
+    # anti-join. merge_minhash_indexes (the other bands-first writer)
+    # holds the same marker, under the same lease.
     delta_bands = band_keys_from_signatures(
         sig, int(meta["num_hashes"]), int(meta["bands"]), meta["hash_family"]
     )
-    pending = f"{path}/_APPEND_PENDING"
-    local = not _URI_SCHEME.match(path)
-    entered_dirty = os.path.exists(pending) if local else True
-    if entered_dirty:
-        band_ids = (
-            spark.read.parquet(f"{path}/bands").select("doc_id").distinct()
-        )
-        delta_bands = delta_bands.join(band_ids, "doc_id", "left_anti")
-    if local and not entered_dirty:
-        with open(pending, "w") as fh:
-            fh.write("append in flight\n")
-    band_buckets = int(meta.get("band_buckets", 0) or 0)
-    if band_buckets > 0:
-        # bucketed layout: the delta's band rows land in their
-        # deterministic bbucket= partitions (append never reshuffles
-        # existing data); placement hash identical to save/probe
-        delta_bands.withColumn("bbucket", _band_bucket(band_buckets)) \
-            .write.mode("append").partitionBy("bbucket") \
-            .parquet(f"{path}/bands")
-    else:
-        delta_bands.write.mode("append").parquet(f"{path}/bands")
-    sig.write.mode("append").parquet(f"{path}/sigs")
-    if local and not entered_dirty:
-        os.remove(pending)
+    with append_pending(path, "append in flight\n") as dirty:
+        if dirty:
+            band_ids = (
+                spark.read.parquet(f"{path}/bands").select("doc_id").distinct()
+            )
+            delta_bands = delta_bands.join(band_ids, "doc_id", "left_anti")
+        band_buckets = int(meta.get("band_buckets", 0) or 0)
+        if band_buckets > 0:
+            # bucketed layout: the delta's band rows land in their
+            # deterministic bbucket= partitions (append never reshuffles
+            # existing data); placement hash identical to save/probe
+            delta_bands.withColumn("bbucket", _band_bucket(band_buckets)) \
+                .write.mode("append").partitionBy("bbucket") \
+                .parquet(f"{path}/bands")
+        else:
+            delta_bands.write.mode("append").parquet(f"{path}/bands")
+        sig.write.mode("append").parquet(f"{path}/sigs")
     return int(n_new)
 
 
-def _require_local_index_path(path: str, verb: str) -> None:
-    """The tombstone/compaction maintenance verbs do driver-side
-    filesystem surgery (os.path probes, shutil/os.replace swaps) that
-    only works on a LOCAL index path. The read/serve verbs
-    (save/load/probe/append) go through Spark readers and work on any
-    Hadoop URI — and because delete/compact refuse non-local paths, a
-    remote index can never hold tombstones or staging, so the local
-    os.path probes in _read_deletes/_recover_compaction returning
-    "nothing there" are CORRECT for remote paths (review finding:
-    without this guard, a delete against s3a:// would record tombstones
-    via Spark but never apply them — a silent right-to-be-forgotten
-    failure). ``file://`` is rejected too (ADVICE r10): Spark resolves
-    the scheme but the driver-side os.path probes / rmtree / os.replace
-    here treat the string literally, so a file:// index would hit the
-    exact silent-tombstone failure the guard exists to close — pass the
-    plain posix path instead. At 100 TB these verbs belong behind a
-    table format's metadata transaction; this plain-parquet store
-    refuses loudly instead."""
-    from samba_spark.operators.leases import require_plain_local_path
-
-    require_plain_local_path(
-        path,
-        verb,
-        "index maintenance (tombstones/compaction)",
-        "rebuild via save_minhash_index to a fresh path, or host the "
-        "index on a local/posix mount",
-    )
-
-
-def _read_deletes(spark, path: str):
-    """The tombstone set (doc_id) under ``path``/deletes, or None when
-    no delete has ever been recorded (the common case — checked with
-    one os.path probe, not a try/except scan, so the fast path costs
-    no Spark job)."""
-    if not os.path.isdir(f"{path}/deletes"):
-        return None
-    return spark.read.parquet(f"{path}/deletes").select("doc_id").distinct()
-
-
-def _recover_compaction(path: str) -> None:
-    """Repair an interrupted :func:`compact_minhash_index` — called by
-    every verb before touching the index. The compaction protocol
-    writes the full replacement datasets under ``_compact/`` and only
-    then creates ``_compact/_COMMIT``; recovery is therefore a pure
-    state-machine read:
-
-    * ``_compact`` present WITHOUT the marker → the rewrite died before
-      commit: the live datasets are untouched and authoritative — roll
-      BACK (drop ``_compact``).
-    * ``_compact`` present WITH the marker → the swap died mid-flight:
-      the replacement datasets are complete and authoritative — roll
-      FORWARD (finish the swap exactly as compact would have).
-
-    At 100 TB this protocol is what a table format's metadata commit
-    does transactionally (Delta/Iceberg snapshot swap); the
-    plain-parquet store mirrors it with a marker file + deterministic
-    replay, same single-writer requirement as append."""
-    staging = f"{path}/_compact"
-    if not os.path.isdir(staging):
-        return
-    if not os.path.exists(f"{staging}/_COMMIT"):
-        shutil.rmtree(staging, ignore_errors=True)
-        return
-    _finish_compaction_swap(path)
-
-
-def _finish_compaction_swap(path: str) -> None:
-    """Roll the committed ``_compact`` staging into place. Each step is
-    idempotent (guarded by existence checks), so a crash anywhere in
-    this sequence is repaired by simply running it again."""
-    staging = f"{path}/_compact"
-    for name in ("sigs", "bands"):
-        new = f"{staging}/{name}"
-        live = f"{path}/{name}"
-        if os.path.isdir(new):
-            shutil.rmtree(live, ignore_errors=True)
-            os.replace(new, live)
-    shutil.rmtree(f"{path}/deletes", ignore_errors=True)
-    shutil.rmtree(staging, ignore_errors=True)
-
-
-@single_writer("delete_from_minhash_index", "path")
+@single_writer(MINHASH_STORE, "delete_from_minhash_index", "path")
 def delete_from_minhash_index(spark, path: str, doc_ids) -> int:
     """Index lifecycle verb 4 of 5 (save → probe → append → DELETE →
     compact): tombstone documents out of a persisted MinHash index —
@@ -2327,38 +2224,15 @@ def delete_from_minhash_index(spark, path: str, doc_ids) -> int:
     could both pass the already-tombstoned anti-join and append
     duplicate tombstone rows — harmless for probe correctness (the
     tombstone set is read DISTINCT) but unbounded growth. ENFORCED
-    since round 11: the ``_LEASE`` marker (leases.single_writer) makes
-    a concurrent verb fail loudly at entry instead.
+    since round 11: the store lease (store.single_writer) makes a
+    concurrent verb fail loudly at entry instead.
     """
-    from samba_spark.operators.guards import tiny_df
-
-    _require_local_index_path(path, "delete_from_minhash_index")
-    _recover_compaction(path)
-    if not isinstance(doc_ids, DataFrame):
-        ids_df = tiny_df(
-            spark, [(int(i),) for i in doc_ids], "doc_id long"
-        )
-    else:
-        ids_df = doc_ids.select(F.col("doc_id").cast("long"))
-    ids_df = ids_df.distinct()
-    # tombstone only ids physically present and not already tombstoned
-    present = spark.read.parquet(f"{path}/sigs").select("doc_id")
-    fresh = ids_df.join(present, "doc_id", "left_semi")
-    existing = _read_deletes(spark, path)
-    if existing is not None:
-        fresh = fresh.join(existing, "doc_id", "left_anti")
-    # lazy cut + count fusion (one job instead of checkpoint-then-count
-    # two): the count materializes every partition, and the write below
-    # re-reads the persisted blocks
-    fresh = fresh.localCheckpoint(eager=False)
-    n = fresh.count()
-    if n == 0:
-        return 0
-    fresh.write.mode("append").parquet(f"{path}/deletes")
-    return n
+    return MINHASH_STORE.record_tombstones(
+        spark, path, doc_ids, spark.read.parquet(f"{path}/sigs")
+    )
 
 
-@single_writer("compact_minhash_index", "path")
+@single_writer(MINHASH_STORE, "compact_minhash_index", "path")
 def compact_minhash_index(spark, path: str, target_files: int = 8) -> dict:
     """Index lifecycle verb 5 of 5: rewrite a persisted MinHash index's
     sigs/bands into a bounded file count with tombstoned rows
@@ -2370,15 +2244,13 @@ def compact_minhash_index(spark, path: str, target_files: int = 8) -> dict:
     probe. ``probe(compact(I)) ≡ probe(I)`` — the shared x161 oracle
     replays the live corpus in one pass and must be indistinguishable.
 
-    Protocol (crash-safe; see :func:`_recover_compaction` for the
-    recovery state machine — roll back before the ``_COMMIT`` marker
-    exists, roll forward after):
+    Protocol (crash-safe; the staged commit of store.py — roll back
+    before the commit marker exists, roll forward after):
 
     1. write live rows (physical minus tombstones), repartitioned to
        ``target_files``, under ``_compact/sigs`` and ``_compact/bands``
-    2. create ``_compact/_COMMIT`` — the commit point
-    3. swap each dataset into place (idempotent), drop ``deletes``,
-       drop ``_compact``
+    2. write the commit marker — the commit point
+    3. swap each dataset into place, drop ``deletes``, drop ``_compact``
 
     The repartition is a full shuffle of the index datasets — this is
     a scheduled-maintenance verb, amortized across the appends since
@@ -2390,42 +2262,20 @@ def compact_minhash_index(spark, path: str, target_files: int = 8) -> dict:
         raise ValueError(
             f"compact_minhash_index: target_files={target_files} must be >= 1"
         )
-    _require_local_index_path(path, "compact_minhash_index")
-    _recover_compaction(path)
-    staging = f"{path}/_compact"
+    staging = staging_dir(path)
 
-    def _nfiles(name: str) -> int:
-        # count every data file, whatever its suffix (VERDICT r10:
-        # a *.parquet glob reads 0 for .snappy.parquet-style layouts);
-        # recursive so bucketed layouts (bbucket= partition dirs) count
-        # files, not directories
-        d = f"{path}/{name}"
-        if not os.path.isdir(d):
-            return 0
-        n = 0
-        for root, dirs, files in os.walk(d):
-            dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
-            n += sum(1 for f in files if not f.startswith(("_", ".")))
-        return n
+    def _nfiles() -> dict:
+        return {n: count_data_files(f"{path}/{n}") for n in ("sigs", "bands")}
 
-    files_before = {n: _nfiles(n) for n in ("sigs", "bands")}
-    # the physical-row count for the rows_removed metric rides the sigs
-    # staging rewrite as an Observation (CollectMetrics above the scan,
-    # below the tombstone anti-join) instead of a separate full pass
-    # over the fragmented pre-compact dataset
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    sigs = spark.read.parquet(f"{path}/sigs").observe(
-        obs, F.count(F.lit(1)).alias("n_sig_rows")
-    )
+    files_before = _nfiles()
+    # both row counts ride the sigs staging rewrite as Observations —
+    # physical rows above the scan, live rows above the tombstone
+    # anti-join — instead of separate passes over the datasets
+    sigs, n_sig_rows = counting(spark.read.parquet(f"{path}/sigs"))
     bands = spark.read.parquet(f"{path}/bands")
-    deletes = _read_deletes(spark, path)
-    live_sigs, live_bands = sigs, bands
-    if deletes is not None:
-        live_sigs = sigs.join(deletes, "doc_id", "left_anti")
-        live_bands = bands.join(deletes, "doc_id", "left_anti")
-    # a sticky _APPEND_PENDING marker (an append/merge once died between
+    live_sigs, n_live = counting(MINHASH_STORE.live(spark, path, sigs))
+    live_bands = MINHASH_STORE.live(spark, path, bands)
+    # a sticky append-pending marker (an append/merge once died between
     # its bands and sigs writes — see append_minhash_index) is healed
     # HERE: reconciling the bands rewrite against the physical sig ids
     # drops any stranded bands-without-sigs rows (which could never
@@ -2434,7 +2284,7 @@ def compact_minhash_index(spark, path: str, target_files: int = 8) -> dict:
     # path. Normal-path compacts (no marker) skip the extra join
     # entirely. Fresh read for the semi side — the observed ``sigs``
     # plan must stay single-consumer or the metric double-fires.
-    pending = f"{path}/_APPEND_PENDING"
+    pending = pending_marker(path)
     reconcile = os.path.exists(pending)
     if reconcile:
         live_bands = live_bands.join(
@@ -2445,7 +2295,7 @@ def compact_minhash_index(spark, path: str, target_files: int = 8) -> dict:
     # The two staging rewrites are independent jobs on disjoint output
     # dirs (sigs and bands never read each other) — overlap them from a
     # 2-thread pool (guide §2.6) so the second rewrite back-fills the
-    # executor slots the first's stage tail leaves idle. The _COMMIT
+    # executor slots the first's stage tail leaves idle. The commit
     # marker is only written after BOTH futures resolve, so the
     # crash-safety protocol is unchanged.
     from concurrent.futures import ThreadPoolExecutor, wait
@@ -2470,7 +2320,7 @@ def compact_minhash_index(spark, path: str, target_files: int = 8) -> dict:
         }
         # wait for BOTH before raising (ADVICE r11): fs.result() alone
         # would swallow a concurrent bands failure — crash-safety holds
-        # either way (_COMMIT unwritten → rollback), but a dual failure
+        # either way (no commit marker → rollback), but a dual failure
         # must report both causes for diagnosability
         wait(futures.values())
         errs = {n: f.exception() for n, f in futures.items() if f.exception()}
@@ -2481,26 +2331,21 @@ def compact_minhash_index(spark, path: str, target_files: int = 8) -> dict:
                 "compact_minhash_index: both staging rewrites failed — "
                 + "; ".join(f"{n}: {e!r}" for n, e in errs.items())
             ) from errs["sigs"]
-    # commit point: from here recovery rolls FORWARD
-    with open(f"{staging}/_COMMIT", "w") as fh:
-        fh.write("committed\n")
-    _finish_compaction_swap(path)
+    MINHASH_STORE.commit(path)
     if reconcile:
         # bands now provably ⊆ sigs: appends regain the fast path. A
         # crash before this line leaves the marker set — conservative
         # (appends keep repairing), never wrong.
         os.remove(pending)
-    n_sig_rows = int(obs.get["n_sig_rows"])
-    n_live = spark.read.parquet(f"{path}/sigs").count()
     return {
         "files_before": files_before,
-        "files_after": {n: _nfiles(n) for n in ("sigs", "bands")},
-        "rows_removed": n_sig_rows - n_live,
-        "live_docs": n_live,
+        "files_after": _nfiles(),
+        "rows_removed": n_sig_rows() - n_live(),
+        "live_docs": n_live(),
     }
 
 
-@single_writer("merge_minhash_indexes", "dest_path", "src_path")
+@single_writer(MINHASH_STORE, "merge_minhash_indexes", "dest_path", "src_path")
 def merge_minhash_indexes(spark, dest_path: str, src_path: str) -> int:
     """Index lifecycle verb 6: MERGE one persisted MinHash index into
     another WITHOUT re-signaturing — the distributed-build pattern a
@@ -2534,10 +2379,6 @@ def merge_minhash_indexes(spark, dest_path: str, src_path: str) -> int:
 
     Returns the number of documents merged in.
     """
-    _require_local_index_path(dest_path, "merge_minhash_indexes(dest)")
-    _require_local_index_path(src_path, "merge_minhash_indexes(src)")
-    _recover_compaction(dest_path)
-    _recover_compaction(src_path)
 
     def _meta(path):
         rows = spark.read.parquet(f"{path}/meta").collect()
@@ -2573,32 +2414,28 @@ def merge_minhash_indexes(spark, dest_path: str, src_path: str) -> int:
     fresh_bands = src_bands.join(
         fresh_sigs.select("doc_id"), "doc_id", "left_semi"
     )
-    # same _APPEND_PENDING protocol as append_minhash_index (merge is
+    # same append-pending protocol as append_minhash_index (merge is
     # the other bands-first writer): the dest band anti-join is only a
     # crash-retry repair, skipped while the store has never crashed
-    # mid-append (dest is require-local, so the marker always applies)
-    pending = f"{dest_path}/_APPEND_PENDING"
-    entered_dirty = os.path.exists(pending)
-    if entered_dirty:
-        dest_band_ids = (
-            spark.read.parquet(f"{dest_path}/bands")
-            .select("doc_id")
-            .distinct()
-        )
-        fresh_bands = fresh_bands.join(dest_band_ids, "doc_id", "left_anti")
-    else:
-        with open(pending, "w") as fh:
-            fh.write("merge append in flight\n")
-    if dmeta["band_buckets"] > 0:
-        fresh_bands = fresh_bands.withColumn(
-            "bbucket", _band_bucket(dmeta["band_buckets"])
-        )
-        fresh_bands.write.mode("append").partitionBy("bbucket").parquet(
-            f"{dest_path}/bands"
-        )
-    else:
-        fresh_bands.write.mode("append").parquet(f"{dest_path}/bands")
-    fresh_sigs.write.mode("append").parquet(f"{dest_path}/sigs")
-    if not entered_dirty:
-        os.remove(pending)
+    # mid-append
+    with append_pending(dest_path, "merge append in flight\n") as dirty:
+        if dirty:
+            dest_band_ids = (
+                spark.read.parquet(f"{dest_path}/bands")
+                .select("doc_id")
+                .distinct()
+            )
+            fresh_bands = fresh_bands.join(
+                dest_band_ids, "doc_id", "left_anti"
+            )
+        if dmeta["band_buckets"] > 0:
+            fresh_bands = fresh_bands.withColumn(
+                "bbucket", _band_bucket(dmeta["band_buckets"])
+            )
+            fresh_bands.write.mode("append").partitionBy("bbucket").parquet(
+                f"{dest_path}/bands"
+            )
+        else:
+            fresh_bands.write.mode("append").parquet(f"{dest_path}/bands")
+        fresh_sigs.write.mode("append").parquet(f"{dest_path}/sigs")
     return int(n_new)

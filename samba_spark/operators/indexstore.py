@@ -46,7 +46,15 @@ import json
 import math
 
 from samba_spark.operators.guards import tiny_df
-from samba_spark.operators.leases import single_writer
+from samba_spark.operators.store import (
+    Store,
+    count_data_files,
+    counting,
+    is_local,
+    replace_dirs,
+    single_writer,
+    staging_dir,
+)
 
 _VERSION = 1
 
@@ -367,6 +375,12 @@ def load_kmeans_index(spark, path: str):
 
 
 # -- IVF-PQ postings: shard-parallel build + merge + serve -----------------
+# The postings store's declaration to the store protocol (store.py):
+# compaction stages the whole ``postings`` dataset, and tombstones are
+# keyed on vec_id.
+VECTOR_STORE = Store(replace_dirs("postings"), key="vec_id")
+
+
 def _read_postings(spark, path: str):
     """The persisted postings dataset under ``path``/postings, or None
     when none has been built. Local paths use one free os.path probe
@@ -378,9 +392,7 @@ def _read_postings(spark, path: str):
     corpus (round-11 review pass)."""
     import os
 
-    from samba_spark.operators.leases import _URI_SCHEME
-
-    if not _URI_SCHEME.match(path):
+    if is_local(path):
         if not os.path.isdir(f"{path}/postings"):
             return None
         return spark.read.parquet(f"{path}/postings")
@@ -392,7 +404,7 @@ def _read_postings(spark, path: str):
         return None
 
 
-@single_writer("build_ivf_pq_postings", "path")
+@single_writer(VECTOR_STORE, "build_ivf_pq_postings", "path", remote_ok=True)
 def build_ivf_pq_postings(spark, path: str, embeddings) -> int:
     """Shard-build verb for the IVF-PQ store (VERDICT r10 item 6 — the
     x164 distributed-build pattern, ANN instance): encode a shard's
@@ -410,11 +422,8 @@ def build_ivf_pq_postings(spark, path: str, embeddings) -> int:
     dataset: the append itself is the commit). Single-writer,
     lease-enforced on local paths. Returns the number of vectors
     newly posted."""
-    from samba_spark.operators.leases import reject_file_scheme
     from samba_spark.operators.simsearch import _ivf_pq_encode_prepared
 
-    reject_file_scheme(path, "build_ivf_pq_postings")
-    _recover_vector_compaction(path)
     cents, books, params = load_ivf_pq_index(spark, path)
     enc = _ivf_pq_encode_prepared(
         embeddings,
@@ -440,7 +449,9 @@ def build_ivf_pq_postings(spark, path: str, embeddings) -> int:
     return int(n)
 
 
-@single_writer("merge_vector_index_shards", "dest_path", "src_path")
+@single_writer(
+    VECTOR_STORE, "merge_vector_index_shards", "dest_path", "src_path"
+)
 def merge_vector_index_shards(spark, dest_path: str, src_path: str) -> int:
     """Absorb one IVF-PQ shard store's PERSISTED postings into another
     — the serving index's side of the distributed build: shard
@@ -468,10 +479,6 @@ def merge_vector_index_shards(spark, dest_path: str, src_path: str) -> int:
     BOTH stores are lease-held (loud-failure acquisition — crossing
     merges cannot deadlock). Returns the number of vectors merged
     in."""
-    _require_local_vector_path(dest_path, "merge_vector_index_shards(dest)")
-    _require_local_vector_path(src_path, "merge_vector_index_shards(src)")
-    _recover_vector_compaction(dest_path)
-    _recover_vector_compaction(src_path)
     dc, db, dp = load_ivf_pq_index(spark, dest_path)
     sc_, sb, sp = load_ivf_pq_index(spark, src_path)
     d_struct = {k: dp[k] for k in ("n_cells", "dim", "m", "n_centroids", "dsub")}
@@ -489,11 +496,9 @@ def merge_vector_index_shards(spark, dest_path: str, src_path: str) -> int:
             f"merge_vector_index_shards: {src_path} has no postings — "
             "run build_ivf_pq_postings on the shard first"
         )
-    src_deletes = _read_vector_deletes(spark, src_path)
-    if src_deletes is not None:
-        # the source's LIVE rows only — a vector tombstoned in the
-        # shard must not resurrect through a merge
-        src_post = src_post.join(src_deletes, "vec_id", "left_anti")
+    # the source's LIVE rows only — a vector tombstoned in the shard
+    # must not resurrect through a merge
+    src_post = VECTOR_STORE.live(spark, src_path, src_post)
     dest_post = _read_postings(spark, dest_path)
     fresh = src_post
     if dest_post is not None:
@@ -524,11 +529,10 @@ def probe_ivf_pq_store(
     same pinned state — asserted by the x167 oracle. Tombstoned
     vec_ids (delete_from_vector_store) are anti-joined out before
     scoring, so a probe never serves a deleted vector even before the
-    compact physically removes it."""
-    from samba_spark.operators.leases import reject_file_scheme
-
-    reject_file_scheme(path, "probe_ivf_pq_store")
-    _recover_vector_compaction(path)
+    compact physically removes it. A committed but unfinished compaction
+    is finished first, under the writer lease (``LeaseHeldError`` while
+    a writer holds it); uncommitted staging is left to its writer."""
+    VECTOR_STORE.recover_for_read(path, "probe_ivf_pq_store")
     cents, books, params = load_ivf_pq_index(spark, path)
     if n_probe < 1 or n_probe > len(cents):
         raise ValueError(
@@ -541,9 +545,7 @@ def probe_ivf_pq_store(
             f"probe_ivf_pq_store: {path} has no postings — run "
             "build_ivf_pq_postings first"
         )
-    deletes = _read_vector_deletes(spark, path)
-    if deletes is not None:
-        post = post.join(deletes, "vec_id", "left_anti")
+    post = VECTOR_STORE.live(spark, path, post)
     from samba_spark.operators.simsearch import _ivf_pq_probe_prepared
 
     return _ivf_pq_probe_prepared(
@@ -560,71 +562,7 @@ def probe_ivf_pq_store(
 
 
 # -- vector-store tombstones + compaction (the MinHash lifecycle, ANN) -----
-def _local(path: str) -> bool:
-    from samba_spark.operators.leases import _URI_SCHEME
-
-    return not _URI_SCHEME.match(path)
-
-
-def _require_local_vector_path(path: str, verb: str) -> None:
-    from samba_spark.operators.leases import require_plain_local_path
-
-    require_plain_local_path(
-        path,
-        verb,
-        "vector-store maintenance (tombstones/compaction)",
-        "rebuild the postings to a fresh store, or host the store on a "
-        "local/posix mount",
-    )
-
-
-def _read_vector_deletes(spark, path: str):
-    """The tombstone set (vec_id) under ``path``/deletes, or None when
-    no delete has ever been recorded — one free os.path probe on the
-    common path (delete/compact refuse URI schemes, so a remote store
-    can never hold tombstones and the os probe's 'nothing there' is
-    CORRECT for remote paths, same argument as the MinHash store)."""
-    import os
-
-    if not os.path.isdir(f"{path}/deletes"):
-        return None
-    return spark.read.parquet(f"{path}/deletes").select("vec_id").distinct()
-
-
-def _recover_vector_compaction(path: str) -> None:
-    """Repair an interrupted :func:`compact_vector_store` — called by
-    every vector-store verb before touching postings (no-op for remote
-    paths, which cannot hold staging). Same marker state machine as
-    the MinHash index: staging without ``_COMMIT`` → roll back; with
-    it → roll forward (finish the swap)."""
-    import os
-    import shutil
-
-    if not _local(path):
-        return
-    staging = f"{path}/_compact"
-    if not os.path.isdir(staging):
-        return
-    if not os.path.exists(f"{staging}/_COMMIT"):
-        shutil.rmtree(staging, ignore_errors=True)
-        return
-    _finish_vector_swap(path)
-
-
-def _finish_vector_swap(path: str) -> None:
-    import os
-    import shutil
-
-    staging = f"{path}/_compact"
-    new = f"{staging}/postings"
-    if os.path.isdir(new):
-        shutil.rmtree(f"{path}/postings", ignore_errors=True)
-        os.replace(new, f"{path}/postings")
-    shutil.rmtree(f"{path}/deletes", ignore_errors=True)
-    shutil.rmtree(staging, ignore_errors=True)
-
-
-@single_writer("delete_from_vector_store", "path")
+@single_writer(VECTOR_STORE, "delete_from_vector_store", "path")
 def delete_from_vector_store(spark, path: str, vec_ids) -> int:
     """Vector-store lifecycle verb: tombstone vectors out of the
     postings — the takedown / right-to-be-forgotten path for the ANN
@@ -638,41 +576,15 @@ def delete_from_vector_store(spark, path: str, vec_ids) -> int:
     postings — delete → compact → build is the re-ingestion sequence).
     Single-writer, lease-enforced. Returns the number newly
     tombstoned."""
-    from pyspark.sql import DataFrame
-
-    from samba_spark.operators.guards import tiny_df as _tiny
-
-    _require_local_vector_path(path, "delete_from_vector_store")
-    _recover_vector_compaction(path)
     post = _read_postings(spark, path)
     if post is None:
         raise ValueError(
             f"delete_from_vector_store: {path} has no postings"
         )
-    if not isinstance(vec_ids, DataFrame):
-        ids_df = _tiny(spark, [(int(i),) for i in vec_ids], "vec_id long")
-    else:
-        ids_df = vec_ids.select(
-            vec_ids["vec_id"].cast("long").alias("vec_id")
-        )
-    fresh = ids_df.distinct().join(
-        post.select("vec_id"), "vec_id", "left_semi"
-    )
-    existing = _read_vector_deletes(spark, path)
-    if existing is not None:
-        fresh = fresh.join(existing, "vec_id", "left_anti")
-    # lazy cut + count fusion: the count materializes every partition in
-    # one job (instead of an eager checkpoint job followed by a count),
-    # and the append below re-reads the persisted blocks
-    fresh = fresh.localCheckpoint(eager=False)
-    n = fresh.count()
-    if n == 0:
-        return 0
-    fresh.write.mode("append").parquet(f"{path}/deletes")
-    return int(n)
+    return VECTOR_STORE.record_tombstones(spark, path, vec_ids, post)
 
 
-@single_writer("compact_vector_store", "path")
+@single_writer(VECTOR_STORE, "compact_vector_store", "path")
 def compact_vector_store(spark, path: str, target_files: int = 8) -> dict:
     """Vector-store lifecycle verb: rewrite the postings into a bounded
     file count with tombstoned rows physically removed, then clear the
@@ -680,59 +592,32 @@ def compact_vector_store(spark, path: str, target_files: int = 8) -> dict:
     the MinHash index (per-build file accumulation + per-probe
     tombstone anti-join cost). ``probe(compact(S)) ≡ probe(S)`` —
     the x169 oracle replays the live corpus in one pass. Crash-safe
-    marker protocol: staged rewrite under ``_compact/postings``,
-    ``_COMMIT``, idempotent dir swap (roll back before the marker,
-    roll forward after — :func:`_recover_vector_compaction` runs at
-    every verb entry). The repartition is a full postings shuffle: a
-    scheduled-maintenance verb, like a table format's OPTIMIZE.
-    Single-writer, lease-enforced."""
-    import os
-    import shutil
-
+    staged commit (store.py): staged rewrite under ``_compact/postings``,
+    commit marker, dir swap (roll back before the marker, roll forward
+    after — recovery runs at every verb entry). The repartition is a
+    full postings shuffle: a scheduled-maintenance verb, like a table
+    format's OPTIMIZE. Single-writer, lease-enforced."""
     if target_files < 1:
         raise ValueError(
             f"compact_vector_store: target_files={target_files} must be >= 1"
         )
-    _require_local_vector_path(path, "compact_vector_store")
-    _recover_vector_compaction(path)
     post = _read_postings(spark, path)
     if post is None:
         raise ValueError(f"compact_vector_store: {path} has no postings")
-
-    def _nfiles() -> int:
-        d = f"{path}/postings"
-        if not os.path.isdir(d):
-            return 0
-        return sum(
-            1 for f in os.listdir(d) if not f.startswith(("_", "."))
-        )
-
-    files_before = _nfiles()
-    # the physical-row count rides the staging rewrite as an Observation
-    # (above the scan, below the tombstone anti-join) instead of a
-    # separate full pass over the fragmented pre-compact postings
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    obs = Observation()
-    post = post.observe(obs, F.count(F.lit(1)).alias("n_rows"))
-    deletes = _read_vector_deletes(spark, path)
-    live = post
-    if deletes is not None:
-        live = post.join(deletes, "vec_id", "left_anti")
-    staging = f"{path}/_compact"
-    shutil.rmtree(staging, ignore_errors=True)
+    files_before = count_data_files(f"{path}/postings")
+    # both row counts ride the staging rewrite as Observations (physical
+    # rows above the scan, live rows above the tombstone anti-join)
+    # instead of separate passes over the postings
+    post, n_rows = counting(post)
+    live = VECTOR_STORE.live(spark, path, post)
+    live, n_live = counting(live)
     live.repartition(target_files).write.mode("overwrite").parquet(
-        f"{staging}/postings"
+        f"{staging_dir(path)}/postings"
     )
-    with open(f"{staging}/_COMMIT", "w") as fh:
-        fh.write("committed\n")
-    _finish_vector_swap(path)
-    n_rows = int(obs.get["n_rows"])
-    n_live = spark.read.parquet(f"{path}/postings").count()
+    VECTOR_STORE.commit(path)
     return {
         "files_before": files_before,
-        "files_after": _nfiles(),
-        "rows_removed": int(n_rows - n_live),
-        "live_vectors": int(n_live),
+        "files_after": count_data_files(f"{path}/postings"),
+        "rows_removed": n_rows() - n_live(),
+        "live_vectors": n_live(),
     }

@@ -21,34 +21,19 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
+import uuid
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from samba_spark.operators.leases import single_writer
-
-
-def _require_local_store_path(path: str, verb: str) -> None:
-    """The session-store maintenance verbs drive first-call detection,
-    compaction staging, and marker swaps through driver-side os.path /
-    shutil calls that treat the string literally — so ANY URI scheme
-    (s3a://, hdfs://, even file://) would make os.path.isdir always
-    False and silently route every call down the first-call
-    ``mode('overwrite')`` branch, destroying the accumulated archive
-    while returning success (ADVICE r10). Same refusal contract as the
-    MinHash index verbs: at 100 TB these belong behind a table
-    format's metadata transaction; this plain-parquet store refuses
-    loudly instead."""
-    from samba_spark.operators.leases import require_plain_local_path
-
-    require_plain_local_path(
-        path,
-        verb,
-        "session-store maintenance",
-        "host the store on a local/posix mount or use the batch "
-        "sessionize path",
-    )
+from samba_spark.operators.store import (
+    Store,
+    count_data_files,
+    counting,
+    single_writer,
+    staged_entries,
+    staging_dir,
+)
 
 
 def sessionize(
@@ -1386,7 +1371,7 @@ def _has_store_data(path: str) -> bool:
     """True when ``path`` holds session data (any non-underscore entry).
     The store-exists test CANNOT be a bare os.path.isdir: the writer
     lease creates the directory before the verb body runs, so an empty
-    dir with only ``_LEASE`` in it is a first call, not a store."""
+    dir holding only the lease marker is a first call, not a store."""
     if not os.path.isdir(path):
         return False
     return any(
@@ -1394,90 +1379,69 @@ def _has_store_data(path: str) -> bool:
     )
 
 
-def _count_data_files(path: str) -> int:
-    n = 0
-    for root, dirs, files in os.walk(path):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        n += sum(1 for f in files if not f.startswith(("_", ".")))
-    return n
+def _session_swap(path: str, staging: str, manifest: dict) -> list:
+    """The session store's swap rule (store.py runs the steps; the
+    commit manifest pins which entries the new generation owns):
 
-
-def _recover_session_compaction(path: str) -> None:
-    """Repair an interrupted :func:`compact_session_store` — called by
-    every session-store verb before touching data. Same state machine
-    as the MinHash index's ``_recover_compaction`` (dedup.py): the
-    compaction writes its full replacement dataset under ``_compact/``
-    and only then writes ``_compact/_COMMIT`` (which carries the
-    generation id + staged-entry manifest); recovery rolls BACK (drop
-    staging) before the marker exists and rolls FORWARD (finish the
-    swap) after."""
-    staging = os.path.join(path, "_compact")
-    if not os.path.isdir(staging):
-        return
-    if not os.path.exists(os.path.join(staging, "_COMMIT")):
-        shutil.rmtree(staging, ignore_errors=True)
-        return
-    _finish_session_compaction_swap(path)
-
-
-def _finish_session_compaction_swap(path: str) -> None:
-    """Roll the committed ``_compact`` staging into place. Every step
-    is idempotent, so a crash anywhere here is repaired by running it
-    again (the manifest in ``_COMMIT`` pins exactly which entries the
-    compacted generation owns):
-
-    * bucketed layout — per ``ubucket=k`` directory: rmtree the live
-      dir, os.replace the staged one in (skipped once moved); then
-      drop live partition dirs absent from the manifest.
+    * bucketed layout — each staged ``ubucket=k`` dir replaces the live
+      one (a dir already moved is no longer staged and is skipped).
+      ``scope: full`` (compact: the staged generation owns the whole
+      store) then drops live bucket dirs absent from ``entries``;
+      ``scope: partial`` (user delete: only the affected buckets were
+      rewritten, unlisted ones are untouched) drops the ``empty``
+      buckets, whose every row belonged to a deleted user. Listing them
+      apart from the staged ones keeps a rerun from taking an
+      already-moved bucket for an emptied one. A manifest written
+      before ``empty`` existed listed emptied buckets among
+      ``entries``; its unstaged entries are read as emptied.
     * flat layout — live part files are deleted first (old-first: a
-      crash between delete and move leaves the store momentarily
-      empty for OUTSIDE readers, but every verb recovers before
-      reading, and the staged data + marker survive), then staged
-      files move in under a ``g<gen>-`` prefix so a rerun can tell
-      new-generation files from stale ones.
-
-    ``scope`` in the commit distinguishes a FULL rewrite (compact: the
-    staged generation owns the whole store — unlisted live partition
-    dirs are dropped) from a PARTIAL one (user delete: only the listed
-    buckets were rewritten — unlisted live dirs are untouched, and a
-    listed bucket with NO staged dir means every row in it was doomed,
-    so the live dir is removed)."""
-    staging = os.path.join(path, "_compact")
-    with open(os.path.join(staging, "_COMMIT"), encoding="utf-8") as fh:
-        commit = json.load(fh)
-    gen, layout, entries = commit["gen"], commit["layout"], commit["entries"]
-    scope = commit.get("scope", "full")
+      crash in between leaves the store momentarily empty for OUTSIDE
+      readers, but every verb recovers before reading, and the staged
+      data + marker survive), then staged files move in under a
+      ``g<gen>-`` prefix so a rerun can tell new-generation files from
+      stale ones."""
     data = os.path.join(staging, "data")
-    if layout == "bucketed":
-        for d in entries:
-            src = os.path.join(data, d)
-            live = os.path.join(path, d)
-            if os.path.isdir(src):
-                shutil.rmtree(live, ignore_errors=True)
-                os.replace(src, live)
-            elif scope == "partial":
-                # a listed-but-unstaged bucket rewrote to empty: every
-                # row in it belonged to the deleted users
-                shutil.rmtree(live, ignore_errors=True)
-        if scope == "full":
-            for e in os.listdir(path):
-                if e.startswith("ubucket=") and e not in entries:
-                    shutil.rmtree(os.path.join(path, e), ignore_errors=True)
-    else:
-        prefix = f"g{gen}-"
-        for e in os.listdir(path):
-            if e.startswith(("_", ".", prefix)):
-                continue
-            fp = os.path.join(path, e)
-            if os.path.isdir(fp):
-                shutil.rmtree(fp, ignore_errors=True)
-            else:
-                os.unlink(fp)
-        for e in entries:
-            src = os.path.join(data, e)
-            if os.path.exists(src):
-                os.replace(src, os.path.join(path, prefix + e))
-    shutil.rmtree(staging, ignore_errors=True)
+    entries = manifest["entries"]
+    if manifest["layout"] == "bucketed":
+        staged = [e for e in entries if os.path.isdir(os.path.join(data, e))]
+        if manifest.get("scope", "full") == "full":
+            drop = [
+                e for e in os.listdir(path)
+                if e.startswith("ubucket=") and e not in entries
+            ]
+        else:
+            drop = manifest.get(
+                "empty", [e for e in entries if e not in staged]
+            )
+        steps = []
+        for e in staged:
+            live = os.path.join(path, e)
+            steps += [("rm", live), ("mv", os.path.join(data, e), live)]
+        return steps + [("rm", os.path.join(path, e)) for e in drop]
+    prefix = f"g{manifest['gen']}-"
+    return [
+        ("rm", os.path.join(path, e))
+        for e in sorted(os.listdir(path))
+        if not e.startswith(("_", ".", prefix))
+    ] + [
+        ("mv", os.path.join(data, e), os.path.join(path, prefix + e))
+        for e in entries
+        if os.path.exists(os.path.join(data, e))
+    ]
+
+
+# The session store's declaration to the store protocol (store.py): the
+# swap rule above, and no tombstones — consumers read the store directly,
+# so deletion is physical.
+SESSION_STORE = Store(_session_swap)
+
+
+def _commit(store_path: str, layout: str, entries: list, **extra) -> None:
+    SESSION_STORE.commit(
+        store_path,
+        {"gen": uuid.uuid4().hex[:12], "layout": layout,
+         "entries": entries, **extra},
+    )
 
 
 def _user_bucket(user_col: str, user_buckets: int):
@@ -1530,7 +1494,7 @@ def session_store_tails(
     )
 
 
-@single_writer("sessionize_incremental", "store_path")
+@single_writer(SESSION_STORE, "sessionize_incremental", "store_path")
 def sessionize_incremental(
     spark,
     store_path: str,
@@ -1582,19 +1546,16 @@ def sessionize_incremental(
 
     Maintenance: parquet appends accumulate one file per delta —
     :func:`compact_session_store` rewrites the store to a bounded file
-    count with the same crash-safe marker protocol as the MinHash
-    index (``_recover_session_compaction`` repairs interruptions at
-    every verb entry). Single-writer, lease-ENFORCED
-    (leases.single_writer: a concurrent verb on the same store fails
-    loudly with LeaseHeldError at entry).
+    count with the same crash-safe staged commit as the MinHash index
+    (store.py; interruptions are repaired at every verb entry).
+    Single-writer, lease-ENFORCED (store.single_writer: a concurrent
+    verb on the same store fails loudly with LeaseHeldError at entry).
 
     Returns the delta rows as written (user, event, ts, type,
     session_id); read ``store_path`` for the full table.
     """
     from samba_spark.operators.guards import plan_assert
 
-    _require_local_store_path(store_path, "sessionize_incremental")
-    _recover_session_compaction(store_path)
     if user_buckets < 0:
         raise ValueError(
             f"sessionize_incremental: user_buckets={user_buckets} must "
@@ -1625,7 +1586,7 @@ def sessionize_incremental(
     def _write(df):
         # always append-mode: the store dir pre-exists even on a first
         # call (the writer lease creates it), and an overwrite would
-        # delete the _LEASE and _session_meta.json markers with it
+        # delete the lease and _session_meta.json markers with it
         if user_buckets > 0:
             df = df.withColumn(
                 "ubucket", _user_bucket(user_col, user_buckets)
@@ -1697,7 +1658,7 @@ def sessionize_incremental(
     return out
 
 
-@single_writer("compact_session_store", "store_path")
+@single_writer(SESSION_STORE, "compact_session_store", "store_path")
 def compact_session_store(
     spark, store_path: str, target_files: int = 8
 ) -> dict:
@@ -1707,15 +1668,15 @@ def compact_session_store(
     file each, forever — a year of appends is 365 files whose footers
     EVERY tail-aggregate read lists; this is the same operational wall
     ``compact_minhash_index`` closed for the MinHash index, with the
-    same crash-safe protocol:
+    same crash-safe staged commit (store.py):
 
     1. write the full store, repartitioned, under ``_compact/data``
        (flat: ``target_files`` files; bucketed: one file per live
        ``ubucket`` partition, layout preserved so pruning survives)
-    2. write ``_compact/_COMMIT`` carrying {generation id, layout,
+    2. write the commit marker carrying {generation id, layout,
        staged-entry manifest} — the commit point
-    3. swap staged entries into place (idempotent; see
-       :func:`_finish_session_compaction_swap`), drop staging
+    3. swap staged entries into place (see :func:`_session_swap`),
+       drop staging
 
     ``compact(S) ≡ no-op on results`` — the x166 oracle replays the
     batch sessionization of the full feed and must be
@@ -1724,33 +1685,22 @@ def compact_session_store(
     the last compact, exactly like a table format's OPTIMIZE.
     Single-writer, lease-enforced. Returns {files_before, files_after,
     layout, rows} for the maintenance log."""
-    import uuid
-
     if target_files < 1:
         raise ValueError(
             f"compact_session_store: target_files={target_files} must be >= 1"
         )
-    _require_local_store_path(store_path, "compact_session_store")
-    _recover_session_compaction(store_path)
     if not _has_store_data(store_path):
         raise ValueError(
             f"compact_session_store: no session store at {store_path}"
         )
     meta = _read_session_meta(store_path)
     user_buckets = int(meta["user_buckets"]) if meta else 0
-    files_before = _count_data_files(store_path)
+    files_before = count_data_files(store_path)
     # the rows metric rides the staging rewrite as an Observation
     # (CollectMetrics above the scan) instead of a separate full pass
     # over the fragmented pre-compact store
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    store = spark.read.parquet(store_path).observe(
-        obs, F.count(F.lit(1)).alias("n_rows")
-    )
-    staging = os.path.join(store_path, "_compact")
-    shutil.rmtree(staging, ignore_errors=True)
-    data = os.path.join(staging, "data")
+    store, n_rows = counting(spark.read.parquet(store_path))
+    data = os.path.join(staging_dir(store_path), "data")
     if user_buckets > 0:
         # hash-repartition ON the partition column: each live bucket
         # lands in exactly one task, so each ubucket= dir compacts to
@@ -1762,29 +1712,19 @@ def compact_session_store(
             .parquet(data)
         )
         layout = "bucketed"
-        entries = sorted(
-            e for e in os.listdir(data) if e.startswith("ubucket=")
-        )
     else:
         store.repartition(target_files).write.mode("overwrite").parquet(data)
         layout = "flat"
-        entries = sorted(
-            e for e in os.listdir(data) if not e.startswith(("_", "."))
-        )
-    commit = {"gen": uuid.uuid4().hex[:12], "layout": layout,
-              "entries": entries}
-    with open(os.path.join(staging, "_COMMIT"), "w", encoding="utf-8") as fh:
-        json.dump(commit, fh)
-    _finish_session_compaction_swap(store_path)
+    _commit(store_path, layout, staged_entries(data))
     return {
         "files_before": files_before,
-        "files_after": _count_data_files(store_path),
+        "files_after": count_data_files(store_path),
         "layout": layout,
-        "rows": int(obs.get["n_rows"]),
+        "rows": n_rows(),
     }
 
 
-@single_writer("delete_from_session_store", "store_path")
+@single_writer(SESSION_STORE, "delete_from_session_store", "store_path")
 def delete_from_session_store(
     spark, store_path: str, user_ids, user_col: str = "user_id"
 ) -> int:
@@ -1800,7 +1740,7 @@ def delete_from_session_store(
     be physical at the verb. What makes that affordable is the
     BUCKETED layout: only the buckets containing doomed users are
     rewritten (staged under ``_compact/data`` and swapped through the
-    ``_COMMIT`` marker with ``scope: partial`` — unaffected buckets are
+    commit marker with ``scope: partial`` — unaffected buckets are
     never read, never written, never listed in the manifest), so the
     rewrite is O(affected buckets), not O(archive). At 100 TB with
     N=4096 buckets, deleting one user rewrites ~1/4096th of the store.
@@ -1809,17 +1749,11 @@ def delete_from_session_store(
     reason the bucketed layout exists.
 
     Crash-safe exactly like compact (rollback before the marker, roll
-    forward after; a listed bucket with no staged dir means the bucket
-    rewrote to empty and is removed on swap). Splice correctness is
-    unaffected: deletion removes WHOLE users, so no surviving user's
-    tail changes. Single-writer, lease-enforced. Returns the number of
-    event rows removed."""
-    import uuid
-
-    from pyspark.sql import DataFrame
-
-    _require_local_store_path(store_path, "delete_from_session_store")
-    _recover_session_compaction(store_path)
+    forward after; an affected bucket that rewrote to empty is listed
+    as ``empty`` in the manifest and removed on swap). Splice
+    correctness is unaffected: deletion removes WHOLE users, so no
+    surviving user's tail changes. Single-writer, lease-enforced.
+    Returns the number of event rows removed."""
     if not _has_store_data(store_path):
         raise ValueError(
             f"delete_from_session_store: no session store at {store_path}"
@@ -1847,20 +1781,10 @@ def delete_from_session_store(
         doomed = tiny_df(
             spark, [(u,) for u in user_ids], f"{user_col} {utype}"
         ).distinct()
-    staging = os.path.join(store_path, "_compact")
-    shutil.rmtree(staging, ignore_errors=True)
-    data = os.path.join(staging, "data")
-    def _staged_count() -> int:
-        # read the WRITTEN staging, not the lazy plan (a second action
-        # on the plan would re-scan the store); an empty partitioned
-        # write leaves no readable dataset — that is 0 survivors
-        from pyspark.errors import AnalysisException
-
-        try:
-            return spark.read.parquet(data).count()
-        except AnalysisException:
-            return 0
-
+    data = os.path.join(staging_dir(store_path), "data")
+    # both counts ride the survivor rewrite as Observations — rows before
+    # above the scan, survivors above the anti-join — with no separate
+    # counting pass
     if user_buckets > 0:
         bids = [
             r[0]
@@ -1873,48 +1797,29 @@ def delete_from_session_store(
         if not bids:
             return 0
         # partition-pruned: only the doomed users' buckets are read,
-        # rewritten, and listed in the manifest — O(affected buckets).
-        # The before-count rides the survivor rewrite as an Observation
-        # (above the pruned scan, below the anti-join) — no separate
-        # counting pass over the affected buckets.
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        affected = store.where(F.col("ubucket").isin(bids)).observe(
-            obs, F.count(F.lit(1)).alias("n_before")
+        # rewritten, and listed in the manifest — O(affected buckets)
+        affected, n_before = counting(
+            store.where(F.col("ubucket").isin(bids))
         )
-        survivors = affected.join(doomed, user_col, "left_anti")
+        survivors, n_after = counting(
+            affected.join(doomed, user_col, "left_anti")
+        )
         (
             survivors.repartition(len(bids), F.col("ubucket"))
             .write.mode("overwrite")
             .partitionBy("ubucket")
             .parquet(data)
         )
-        commit = {
-            "gen": uuid.uuid4().hex[:12],
-            "layout": "bucketed",
-            "scope": "partial",
-            "entries": sorted(f"ubucket={b}" for b in bids),
-        }
+        staged = staged_entries(data)
+        emptied = sorted({f"ubucket={b}" for b in bids} - set(staged))
+        removed = n_before() - n_after()
+        _commit(store_path, "bucketed", staged, scope="partial", empty=emptied)
     else:
-        # same Observation fusion on the full-rewrite path
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        survivors = store.observe(
-            obs, F.count(F.lit(1)).alias("n_before")
-        ).join(doomed, user_col, "left_anti")
+        before, n_before = counting(store)
+        survivors, n_after = counting(
+            before.join(doomed, user_col, "left_anti")
+        )
         survivors.repartition(8).write.mode("overwrite").parquet(data)
-        commit = {
-            "gen": uuid.uuid4().hex[:12],
-            "layout": "flat",
-            "scope": "full",
-            "entries": sorted(
-                e for e in os.listdir(data) if not e.startswith(("_", "."))
-            ),
-        }
-    removed = int(obs.get["n_before"]) - _staged_count()
-    with open(os.path.join(staging, "_COMMIT"), "w", encoding="utf-8") as fh:
-        json.dump(commit, fh)
-    _finish_session_compaction_swap(store_path)
+        removed = n_before() - n_after()
+        _commit(store_path, "flat", staged_entries(data), scope="full")
     return int(removed)

@@ -5581,7 +5581,7 @@ def x_vector_store_delete_compact(spark, sf_dir):
     are built once over the full corpus with pinned quantizers, the
     vec_id%7==3 vectors are tombstoned out (O(delete-size) — every
     probe anti-joins them before scoring), the store is compacted
-    through the _COMMIT marker swap (tombstones physically removed,
+    through the commit-marker swap (tombstones physically removed,
     postings bounded to 4 files, tombstone set cleared), and the probe
     is served from the compacted postings. The oracle replays the
     in-query IVF-PQ over the corpus WITHOUT the deleted vectors:
@@ -7093,7 +7093,7 @@ def x_session_store_delete(spark, sf_dir):
     the store is read raw by consumers, so there is no tombstone set
     to hide behind; what bounds the rewrite is the bucketed layout
     (only the doomed users' buckets are read and swapped through the
-    scope:partial _COMMIT manifest — unaffected buckets are never
+    scope:partial commit manifest — unaffected buckets are never
     touched). The oracle sessionizes the SURVIVING users' full feed
     from scratch: physical deletion + splice correctness (whole-user
     removal never changes a survivor's tail) in one hash."""
@@ -7141,7 +7141,7 @@ def x_session_store_compact(spark, sf_dir):
     read statically prunes its store scan to the affected buckets —
     plan-asserted in tests/test_session_store_lifecycle.py), then
     ``compact_session_store`` rewrites the store to one file per live
-    bucket through the crash-safe ``_COMMIT`` marker swap, then a
+    bucket through the crash-safe commit-marker swap, then a
     THIRD delta appends onto the COMPACTED store. The oracle
     sessionizes the full feed from scratch: bucketed-incremental ≡
     batch AND compact ≡ no-op, in one hash check."""

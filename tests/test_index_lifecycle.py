@@ -137,9 +137,16 @@ def test_compact_crash_rollback_before_commit(spark, sf_smoke, tmp_path):
     os.makedirs(f"{p}/_compact/sigs")
     with open(f"{p}/_compact/sigs/part-junk.parquet", "w") as fh:
         fh.write("incomplete")
+    # a reader serves the live datasets and leaves the staging to its
+    # writer (it may still be running) ...
     out = probe_minhash_index(spark, p, _probe_batch(docs), min_agree=8)
     assert _rows(out) == want
+    assert os.path.isdir(f"{p}/_compact")
+    # ... and the next writer verb rolls it back
+    assert delete_from_minhash_index(spark, p, [99_999_999]) == 0
     assert not os.path.isdir(f"{p}/_compact")  # rolled back
+    out = probe_minhash_index(spark, p, _probe_batch(docs), min_agree=8)
+    assert _rows(out) == want
 
 
 def test_compact_crash_rollforward_after_commit(spark, sf_smoke, tmp_path):

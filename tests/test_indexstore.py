@@ -378,7 +378,7 @@ def test_postings_lease_contention(spark, sf_smoke, tmp_path):
     import os
     import time
 
-    from samba_spark.operators.leases import LeaseHeldError
+    from samba_spark.operators.store import LeaseHeldError
 
     embs = _embs(spark, sf_smoke).limit(10)
     p = str(tmp_path / "leased_vec")
@@ -438,7 +438,7 @@ def test_vector_delete_probe_and_compact(spark, sf_smoke, tmp_path):
 def test_vector_compact_rollforward_recovery(spark, sf_smoke, tmp_path, monkeypatch):
     import os
 
-    from samba_spark.operators import indexstore as ixm
+    from samba_spark.operators import store
 
     embs = _embs(spark, sf_smoke)
     p = str(tmp_path / "crash")
@@ -447,7 +447,7 @@ def test_vector_compact_rollforward_recovery(spark, sf_smoke, tmp_path, monkeypa
     ix.delete_from_vector_store(
         spark, p, embs.where(F.col("vec_id") % 3 == 0).select("vec_id")
     )
-    monkeypatch.setattr(ixm, "_finish_vector_swap", lambda path: None)
+    monkeypatch.setattr(store, "finish_swap", lambda path, spec: None)
     ix.compact_vector_store(spark, p, target_files=1)
     monkeypatch.undo()
     assert os.path.exists(os.path.join(p, "_compact", "_COMMIT"))

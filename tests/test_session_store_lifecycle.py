@@ -16,14 +16,15 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from samba_spark.operators.leases import LeaseHeldError, store_lease
+from samba_spark.operators import store as store_protocol
 from samba_spark.operators.sessionize import (
-    _recover_session_compaction,
+    SESSION_STORE,
     compact_session_store,
     session_store_tails,
     sessionize,
     sessionize_incremental,
 )
+from samba_spark.operators.store import LeaseHeldError, store_lease
 
 
 def _events(spark, n_users=40, n_events=600, gap=1800):
@@ -164,7 +165,7 @@ def test_compaction_rollback_before_marker(spark, tmp_path):
         os.path.join(store, "_compact", "data", "junk.parquet"), "w"
     ) as fh:
         fh.write("not parquet")
-    _recover_session_compaction(store)
+    SESSION_STORE.recover(store)
     assert not os.path.isdir(os.path.join(store, "_compact"))
     _assert_matches_batch(spark, store, events)
 
@@ -182,14 +183,14 @@ def test_compaction_rollforward_after_marker(
     sessionize_incremental(spark, store, rest, gap_seconds=1800)
     # crash AT the commit point: staging + marker written, swap never ran
     monkeypatch.setattr(
-        sz, "_finish_session_compaction_swap", lambda path: None
+        store_protocol, "finish_swap", lambda path, spec: None
     )
     compact_session_store(spark, store, target_files=1)
     monkeypatch.undo()
     staging = os.path.join(store, "_compact")
     assert os.path.exists(os.path.join(staging, "_COMMIT"))
     # next verb entry repairs: roll FORWARD to the compacted generation
-    _recover_session_compaction(store)
+    SESSION_STORE.recover(store)
     assert not os.path.isdir(staging)
     files = [
         f
@@ -348,12 +349,12 @@ def test_user_delete_rollforward_recovery(spark, tmp_path, monkeypatch):
         spark, store, events, gap_seconds=1800, user_buckets=4
     )
     monkeypatch.setattr(
-        sz, "_finish_session_compaction_swap", lambda path: None
+        store_protocol, "finish_swap", lambda path, spec: None
     )
     sz.delete_from_session_store(spark, store, ["u5"])
     monkeypatch.undo()
     assert os.path.exists(os.path.join(store, "_compact", "_COMMIT"))
-    sz._recover_session_compaction(store)
+    SESSION_STORE.recover(store)
     assert not os.path.isdir(os.path.join(store, "_compact"))
     _assert_matches_batch(
         spark, store, events.where(F.col("user_id") != "u5")
